@@ -4,10 +4,10 @@ first). For each named query: warm-up pass, min-of-N timed ``count()``
 (the bench's exact methodology), the number of Spark jobs one pass
 launches (stage/job fixed cost dominates small-scale wall time, so the
 job count is the first thing to read next to the seconds), and the
-formatted physical plan written to ``plans/r08/``.
+formatted physical plan written to ``plans/r09/``.
 
 Usage:
-    python scripts/measure_r08.py [--suffix before] [--sf DIR] [name ...]
+    python scripts/measure_r09.py [--suffix before] [--sf DIR] [name ...]
 With no names: the full bench HEADLINE list.
 """
 
@@ -54,7 +54,7 @@ def main() -> None:
     names = args.names or [
         n for n in bench.HEADLINE if n in registry.all_queries()
     ]
-    spark = get_spark("measure_r08")
+    spark = get_spark("measure_r09")
     plans_dir = Path(__file__).resolve().parent.parent / "plans" / "r09"
     plans_dir.mkdir(parents=True, exist_ok=True)
 
@@ -69,10 +69,11 @@ def main() -> None:
         (plans_dir / f"{name}_{args.suffix}.txt").write_text(buf.getvalue())
 
         # warm-up (parquet footers, codegen) then min-of-N, one job-count
-        # reading on the first timed pass. The SQL cache is cleared
-        # between passes so no pass reads intermediates a previous pass
-        # persisted — every timed pass computes from the parquet inputs
-        # (the bench applies the same hygiene).
+        # reading on the first timed pass. By default the SQL cache is
+        # cleared between passes so no pass reads intermediates a previous
+        # pass persisted — every timed pass computes from the parquet
+        # inputs, as bench.py does only under SPARK_GRAFT_BENCH_CLEARCACHE=1.
+        # bench.py's default keeps the cache; --keepcache matches it.
         fn(spark, args.sf).count()
         samples = []
         jobs = None

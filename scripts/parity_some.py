@@ -5,6 +5,7 @@ the named queries. Usage: python scripts/parity_some.py SF_DIR name...
 
 from __future__ import annotations
 
+import itertools
 import math
 import sys
 import time
@@ -64,10 +65,16 @@ def main() -> None:
             else []
         )
         ok = ok and s_rows == o_rows
-        print(f"{'OK  ' if ok else 'FAIL'} {name}: spark={len(s_rows)} oracle={len(o_rows)}")
+        print(f"{'OK  ' if ok else 'FAIL'} {name}: spark={len(s_rows)} oracle={len(odf)}")
         if not ok:
             bad.append(name)
-            for i, (a, b) in enumerate(zip(s_rows, o_rows)):
+            if cols != sorted(odf.columns):
+                print("  spark columns: ", cols)
+                print("  oracle columns:", sorted(odf.columns))
+                continue
+            # zip_longest: when the row counts differ, the first extra row
+            # on the longer side is the first diff (the other side is None)
+            for a, b in itertools.zip_longest(s_rows, o_rows):
                 if a != b:
                     print("  first diff:", a, "vs", b)
                     break

@@ -5,10 +5,12 @@ row-wise concat (P2), HTML + custom-stop-word regex cleaning (X2/X3),
 tokenize (N1/X5), snowball stop-word removal (N2), stemming (N3),
 single-char filter (N4).
 
-Everything is a narrow per-row transform — shuffle-free, whole-stage
-codegen'd except the single Pandas-UDF stemmer stage. At 100 TB this chain
-is embarrassingly parallel: cost scales linearly with input splits and no
-repartition is needed before the downstream ``groupBy``.
+Cleaning, tokenizing and stop-word removal are narrow per-row transforms —
+shuffle-free and whole-stage codegen'd, so at 100 TB that chain is
+embarrassingly parallel. Stemming (``tokenize_corpus(stem=True)``) stems
+the distinct vocabulary once and rebuilds the per-doc arrays with a map
+join and a regroup on ``doc_id``; the paper pipelines tokenize and stem
+the corpus once and share the result (``plans.pipelines``).
 """
 
 from __future__ import annotations
@@ -16,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from week5_datingnlp_big_data_spark.functions.stemmer import stem_tokens
+from week5_datingnlp_big_data_spark.functions.stemmer import stem_one_udf
 from week5_datingnlp_big_data_spark.functions.text import (
     clean_html,
     filter_min_length,
@@ -57,15 +59,65 @@ def tokenize_corpus(
     min_token_len: int = 2,
 ) -> DataFrame:
     """Full N1→N4 chain: clean → tokenize → de-stopword → stem → length
-    filter. Returns the input plus a ``tokens array<string>`` column."""
+    filter. Returns the input plus a ``tokens array<string>`` column
+    (NULL where the text is NULL, ``[]`` where no token survives).
+
+    ``stem=True`` is the engine's one stemming path, and the corpus the
+    paper pipelines share (``plans.pipelines``): the JVM tokenizes, the
+    Python stemmer (``stem_one_udf``) sees each DISTINCT raw word once —
+    |vocab| rows (~10^5), never every token occurrence (~10^7+) — and a
+    map join on the raw word rebuilds the ordered per-doc arrays. The
+    stem map joins by hash key with no forced broadcast: the distinct
+    vocabulary grows with the corpus (Heaps' law), so AQE broadcasts it
+    only when its measured size is small. The rebuild regroups tokens by
+    ``doc_id``, so ``stem=True`` requires a unique ``doc_id``.
+
+    The length filter runs on the rebuilt arrays (the reference filters
+    AFTER stemming, R:86-87). As a higher-order function over the array
+    Catalyst cannot push it through the join and the ``distinct`` into
+    the UDF, where it would stem every token occurrence.
+
+    The plan is a pure function of ``docs``: two calls on the same input
+    build equal plans, so a persisted result (EP-1 persists its corpus)
+    serves every later call from Spark's cache."""
     from week5_datingnlp_big_data_spark.session import spread
 
-    toks = tokenize(clean_text(text_col))
-    toks = remove_stopwords(toks)
-    if stem:
-        toks = stem_tokens(toks)
-    toks = filter_min_length(toks, min_token_len)
-    return spread(docs).withColumn("tokens", toks)
+    if not stem:
+        toks = remove_stopwords(tokenize(clean_text(text_col)))
+        return spread(docs).withColumn("tokens", filter_min_length(toks, min_token_len))
+
+    raw = tokenize_corpus(docs, text_col, stem=False, min_token_len=1)
+    # explode_outer + null filter: no implicit size(tokens) > 0 filter that
+    # Catalyst would push below spread()'s exchange (explode_tokens).
+    exploded = raw.select(
+        "doc_id", F.posexplode_outer("tokens").alias("_pos", "_raw")
+    ).filter(F.col("_raw").isNotNull())
+    # The stemmer is per-row Python: spread the vocabulary over every core,
+    # or AQE coalesces a small one into a single partition on one worker.
+    vocab = exploded.select("_raw").distinct()
+    stem_map = vocab.repartition(
+        vocab.sparkSession.sparkContext.defaultParallelism
+    ).withColumn("_term", stem_one_udf()("_raw"))
+    arrays = (
+        exploded.join(stem_map, "_raw")
+        .groupBy("doc_id")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("_pos", "_term"))),
+                lambda s: s["_term"],
+            ).alias("_toks")
+        )
+    )
+    empty = F.expr("cast(array() as array<string>)")
+    stemmed = filter_min_length(F.coalesce("_toks", empty), min_token_len)
+    # tokens is NULL exactly where the text is (every tokenizer step is
+    # NULL-preserving); docs with no surviving token miss the join → []
+    return (
+        raw.drop("tokens")
+        .join(arrays, "doc_id", "left")
+        .withColumn("tokens", F.when(F.col(text_col).isNotNull(), stemmed))
+        .select(*raw.columns)
+    )
 
 
 def explode_tokens(

@@ -46,10 +46,18 @@ def stem_counts(counts: DataFrame, doc_col: str = "doc_id") -> DataFrame:
     One tiny pandas-UDF pass over the distinct vocabulary, a hash-keyed
     join, and a re-aggregation on (doc, stem) — all the heavy lifting
     stays JVM-side. Use ``functions.stemmer.stem_tokens`` instead when
-    ordered token streams are needed (N5 inspection)."""
+    ordered token streams are needed (N5 inspection).
+
+    The stemmer is marked nondeterministic for the optimizer only: a
+    caller's filter on the stemmed term (the post-stem length filter)
+    would otherwise be pushed through the join and the ``distinct`` into
+    the UDF's input, and inferred onto the probe side through the join
+    key, so the UDF ran on every token row twice instead of once per
+    distinct term."""
     from week5_datingnlp_big_data_spark.functions.stemmer import stem_one_udf
 
-    vocab_stems = counts.select("term").distinct().withColumn("stem", stem_one_udf()("term"))
+    stem = stem_one_udf().asNondeterministic()
+    vocab_stems = counts.select("term").distinct().withColumn("stem", stem("term"))
     return (
         counts.join(vocab_stems, "term")
         .groupBy(doc_col, F.col("stem").alias("term"))

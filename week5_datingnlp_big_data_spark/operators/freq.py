@@ -14,7 +14,7 @@ single hash shuffle on ``word``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from week5_datingnlp_big_data_spark.functions.text import split_raw, tokenize
@@ -48,27 +48,48 @@ def top_k_words(docs: DataFrame, k: int, text_col: str = "text", *, raw: bool = 
     return word_counts(docs, text_col, raw=raw).limit(k)
 
 
+def group_top_words(docs: DataFrame, group_col: str, k: int, text_col: str = "text") -> DataFrame:
+    """T1+T2 for every group at once, raw-split words (R:259) —
+    ``(group, word, cnt, rank)``: each group's top-k words ranked by (cnt
+    desc, word asc), from ONE ``groupBy(group, word)`` count. Slice it with
+    ``group_top_k`` and ``distinctive_words`` for any n ≤ k; persist it
+    when several slices read it. The rank filter plans as a
+    WindowGroupLimit ahead of the window's shuffle (k within Spark's
+    ``windowGroupLimitThreshold``), so each task ships at most k rows per
+    group."""
+    from week5_datingnlp_big_data_spark.operators.corpus import explode_tokens
+
+    w = Window.partitionBy(group_col).orderBy(F.desc("cnt"), F.asc("word"))
+    return (
+        explode_tokens(docs, split_raw(text_col), "word", group_col)
+        .groupBy(group_col, "word")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+    )
+
+
+def _in_top(group_col: str, group: str, k: int) -> Column:
+    return (F.col(group_col) == group) & (F.col("rank") <= k)
+
+
+def group_top_k(ranks: DataFrame, group_col: str, group: str, k: int) -> DataFrame:
+    """T2 — one group's ``top_k_words(k)`` as ``(word, cnt)``, ranked, from
+    a ``group_top_words`` frame ranked to at least k; plans as
+    TakeOrderedAndProject."""
+    return ranks.filter(_in_top(group_col, group, k)).orderBy("rank").limit(k).select("word", "cnt")
+
+
 def distinctive_words(
-    docs: DataFrame,
-    group_col: Column | str,
-    group_a: str,
-    group_b: str,
-    k: int = 500,
-    text_col: str = "text",
-    *,
-    raw: bool = True,
+    ranks: DataFrame, group_col: str, group_a: str, group_b: str, k: int = 500
 ) -> DataFrame:
     """T3 — words in group A's top-k absent from group B's top-k
     (reference ``setdiff(male.words[1:500], female.words[1:500])``,
-    R:278–280). Anti-join of two TakeOrderedAndProject results — both
-    sides are ≤k rows, so the join broadcasts."""
-    g = F.col(group_col) if isinstance(group_col, str) else group_col
-    top_a = top_k_words(docs.filter(g == group_a), k, text_col, raw=raw)
-    top_b = top_k_words(docs.filter(g == group_b), k, text_col, raw=raw)
-    return (
-        top_a.join(F.broadcast(top_b.select("word")), "word", "left_anti")
-        .orderBy(F.desc("cnt"), F.asc("word"))
-    )
+    R:278–280), as ``(word, cnt)`` in A's rank order, from a
+    ``group_top_words`` frame ranked to at least k. Both sides are ≤ k
+    rows, so the anti-join broadcasts."""
+    b_words = F.broadcast(ranks.filter(_in_top(group_col, group_b, k)).select("word"))
+    return group_top_k(ranks.join(b_words, "word", "left_anti"), group_col, group_a, k)
 
 
 def remove_banned_terms(counts: DataFrame, banned: DataFrame, term_col: str = "term") -> DataFrame:

@@ -82,20 +82,23 @@ def label_proportions(df: DataFrame, label_col: str = "label") -> DataFrame:
 def stratified_split(
     df: DataFrame,
     label_col: str = "label",
-    id_col: str = "doc_id",
     train_fraction: float = 0.7,
     seed: int = 32984,
 ) -> tuple[DataFrame, DataFrame]:
     """M1 — per-class 70/30 split (caret createDataPartition, R:138–142;
-    same seed). ``sampleBy`` samples (Bernoulli) rather than exactly
-    partitioning, so row counts vary ~±1 %; class *proportions* are the
-    verified invariant. Test side = anti-join on the id, so the two sides
-    are disjoint and exhaustive regardless of sampling."""
-    labels = [r[0] for r in df.select(label_col).distinct().collect()]
-    fractions = {lab: train_fraction for lab in labels}
-    train = df.stat.sampleBy(label_col, fractions, seed)
-    test = df.join(train.select(id_col), id_col, "left_anti")
-    return train, test
+    same seed). Every row draws ``rand(seed)`` once; the draw is persisted
+    and train / test are its complementary filters ``u < fraction`` /
+    ``u >= fraction``, so the sides are disjoint and their union is the
+    input. With one fraction for every class this keeps exactly the rows
+    ``df.stat.sampleBy(label_col, {c: train_fraction for c in classes},
+    seed)`` keeps (sampleBy filters on the same per-partition
+    ``rand(seed)`` stream), without collecting the classes first or
+    anti-joining the test side. The split is Bernoulli, not an exact
+    partition: row counts vary ~±1 %; class *proportions* are the
+    verified invariant."""
+    drawn = df.withColumn("_u", F.rand(seed)).persist()
+    keep = F.col("_u") < train_fraction
+    return drawn.filter(keep).drop("_u"), drawn.filter(~keep).drop("_u")
 
 
 def train_decision_tree(
@@ -154,6 +157,17 @@ def accuracy(pred: DataFrame, label_col: str = "label") -> float:
         F.count(F.lit(1)).alias("n"),
     ).first()
     return agg["hit"] / agg["n"] if agg["n"] else 0.0
+
+
+def evaluate(pred: DataFrame, label_col: str = "label") -> tuple[DataFrame, float]:
+    """``(confusion_matrix(pred), accuracy(pred))`` from one pass over
+    ``pred``: the confusion matrix (at most classes² rows) is persisted
+    and collected once, and accuracy is its diagonal's share."""
+    confusion = confusion_matrix(pred, label_col).persist()
+    rows = confusion.collect()
+    n = sum(r["n"] for r in rows)
+    hit = sum(r["n"] for r in rows if r["predicted"] is not None and r["predicted"] == r["actual"])
+    return confusion, (hit / n if n else 0.0)
 
 
 def top_features(model: PipelineModel, vocabulary: list[str], k: int = 10) -> list[tuple[str, float]]:
@@ -558,6 +572,11 @@ def naive_bayes_score(
     pairs and the per-posting fan-out from C to the handful of classes
     the term actually occurred in.
 
+    Precondition: no label equals the NUL string ``"\\x00"``. NUL is the
+    sentinel key of the per-term delta map; a label equal to it collides
+    with the sentinel, and ``map_concat`` then raises at run time under
+    the default ``spark.sql.mapKeyDedupPolicy=EXCEPTION``.
+
     Returns ``(id, label, score)``.
     """
     counts = (
@@ -572,8 +591,8 @@ def naive_bayes_score(
     # term-keyed join instead of two), PLUS a sentinel entry worth 1 per
     # token: its per-doc sum IS T_d, so one aggregation produces the
     # delta sums and the token total together — no separate T_d pass, no
-    # second attach join. The sentinel key is NUL, which no label can be
-    # (labels come out of groupBy keys of real columns). Map entry order
+    # second attach join. The sentinel key is NUL, which the docstring's
+    # precondition keeps out of the label set. Map entry order
     # follows the nondeterministic collect_list, which only permutes
     # int64 additions.
     sent = "\x00"

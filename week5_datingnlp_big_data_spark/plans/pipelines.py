@@ -7,8 +7,12 @@ EP-3 frequency analysis + unsupervised (R:258–326)
 
 The reference materializes eagerly at every step (33 GB peak); here each
 pipeline is declared lazily and only the terminal artifacts materialize.
-The tokenized corpus is cached once and shared — the analog of the
-reference keeping `all.tokens` alive across its three sections.
+The corpus is tokenized and stemmed once and shared — the analog of the
+reference keeping `all.tokens` alive across its three sections: EP-1
+persists ``corpus.tokenize_corpus(profiles_to_docs(p))`` and its trimmed
+DFM, and EP-2 on the same profiles builds equal plans, which Spark's
+cache manager answers from EP-1's cache. EP-3 derives its four word
+lists from one ranked word count.
 """
 
 from __future__ import annotations
@@ -18,7 +22,6 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from week5_datingnlp_big_data_spark.functions import stemmer
 from week5_datingnlp_big_data_spark.operators import corpus, dfm, freq, ml, tfidf
 
 
@@ -45,73 +48,30 @@ def ep1_classification(
     seed: int = 32984,
     stage_timings: dict[str, float] | None = None,
 ) -> EP1Result:
-    """EP-1: corpus prep → tokens → trimmed DFM → vectorize → stratified
-    split → decision tree → confusion matrix. Thresholds default lower
-    than the reference's 25/35 (R:105) because test fixtures are ~500 docs
-    vs 60k; pass 25/35 at full scale.
+    """EP-1: corpus prep → stemmed tokens → trimmed DFM → vectorize →
+    stratified split → decision tree → confusion matrix. Thresholds
+    default lower than the reference's 25/35 (R:105) because test
+    fixtures are ~500 docs vs 60k; pass 25/35 at full scale.
+
+    The stemmed corpus (``corpus.tokenize_corpus``, which needs a unique
+    ``doc_id``) and its trimmed DFM are persisted and returned as
+    ``tokenized`` / ``counts``: a later
+    ``ep2_tfidf(tokenize_corpus(profiles_to_docs(profiles)))`` builds
+    the same plans, so Spark's cache manager serves both and EP-2 runs
+    no tokenizer and no Python.
 
     Pass ``stage_timings={}`` to get a featurize / fit / evaluate
     wall-clock breakdown written into the dict (used by
-    scripts/scale_stress.py). The breakdown forces the train/test caches
-    at the stage boundary — an action the tree fit would trigger anyway,
-    so the total is unchanged; with the default ``None`` no extra action
+    scripts/scale_stress.py). The breakdown forces the split's cache at
+    the stage boundary — an action the tree fit would trigger anyway, so
+    the total is unchanged; with the default ``None`` no extra action
     runs."""
     import time as _time
 
     _t0 = _time.perf_counter()
     docs = corpus.profiles_to_docs(profiles)
-    # Tokenize WITHOUT stemming: the whole clean/tokenize/stopword chain is
-    # JVM regex work. Stemming happens below on DISTINCT terms only — the
-    # Zipf-aware formulation (dfm.stem_counts' trick, applied to the full
-    # pipeline): the Python stemmer touches |vocab| rows (~10^5), never
-    # every token occurrence (~10^7+). min_token_len=1 defers the length
-    # filter: the reference applies it AFTER stemming (R:86-87).
-    raw = corpus.tokenize_corpus(docs, stem=False, min_token_len=1).cache()
-    # Materialization barrier: several downstream shuffle-map stages read
-    # this cache concurrently — cold, each would re-run the tokenizer
-    # (measured ~3x the corpus scan at 60k docs).
-    raw.count()
-
-    exploded = raw.select("doc_id", F.posexplode("tokens").alias("_pos", "_raw"))
-    stem_map = (
-        exploded.select("_raw").distinct()
-        .withColumn("_term", stemmer.stem_one_udf()("_raw"))
-        .persist()  # |vocab| rows; consumed by counts AND rebuild
-    )
-    # Ordered stemmed token stream, post-stem length filter as in the
-    # reference chain. The stem map joins by hash key with NO forced
-    # broadcast: the distinct vocabulary grows with the corpus (Heaps'
-    # law, unbounded at 100 TB), so AQE decides — it broadcasts when the
-    # measured size is small (every local run) and shuffles otherwise.
-    # Recomputations of this frame only re-run that map join against the
-    # cached raw tokens — all JVM-side.
-    stemmed = (
-        exploded.join(stem_map, "_raw")
-        .filter(F.length("_term") >= 2)
-        .select("doc_id", "_pos", "_term")
-    )
-    counts = dfm.trim_vocabulary(
-        stemmed.groupBy("doc_id", F.col("_term").alias("term")).agg(
-            F.count(F.lit(1)).alias("count")
-        ),
-        min_docfreq,
-        min_termfreq,
-    )
-    # Stemmed token arrays (EP1Result.tokenized contract) — lazy; only
-    # materializes if a consumer (EP-2) asks.
-    _as_arrays = lambda df: df.groupBy("doc_id").agg(  # noqa: E731
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("_pos", "_term"))),
-            lambda s: s["_term"],
-        ).alias("_toks")
-    )
-    empty_arr = F.expr("cast(array() as array<string>)")
-    tokenized = (
-        raw.drop("tokens")
-        .join(_as_arrays(stemmed), "doc_id", "left")
-        .withColumn("tokens", F.coalesce("_toks", empty_arr))
-        .drop("_toks")
-    )
+    tokenized = corpus.tokenize_corpus(docs).persist()
+    counts = _trimmed_counts(tokenized, min_docfreq, min_termfreq).persist()
     # Vector view against the trimmed vocabulary. The vocabulary is the
     # DFM trim's term set, ordered by corpus frequency desc (matching what
     # a fitted CountVectorizer would produce); terms outside it contribute
@@ -120,35 +80,20 @@ def ep1_classification(
     # scan. Post-trim vocabulary is bounded (Heaps' law + df/tf floors),
     # so collecting it into the model's broadcast dictionary stays small
     # even at 100 TB corpus scale — the same driver-side footprint a
-    # fitted CountVectorizerModel carries.
-    vocab_rows = (
-        counts.groupBy("term")
-        .agg(F.sum("count").alias("_tf"))
-        .orderBy(F.desc("_tf"), "term")
-        .select("term")
-        .collect()
-    )
-    vocab = [r["term"] for r in vocab_rows]
-    # Persisted: transform and the split's label scan each consume it.
-    vec_input = tokenized.persist()
-    vectorized = ml.vectorize_with_vocabulary(vec_input, vocab)
-
-    # Narrow to the modeling columns and persist BEFORE the split: the
-    # split's two sides would otherwise each re-run the vectorize
-    # transform over the full corpus (sampleBy is narrow but the anti-join
-    # side re-reads the whole chain). One materialization, both sides
-    # read the cache; the text columns stay out of executor memory.
-    labeled = vectorized.select(
-        "doc_id", F.col("sex").alias("label"), "features"
-    ).persist()
+    # fitted CountVectorizerModel carries. The ranking happens on the
+    # driver over the collected rows: no range-partitioned sort job.
+    tf_rows = counts.groupBy("term").agg(F.sum("count").alias("_tf")).collect()
+    vocab = [r["term"] for r in sorted(tf_rows, key=lambda r: (-r["_tf"], r["term"]))]
+    vectorized = ml.vectorize_with_vocabulary(tokenized, vocab)
+    # Only the modeling columns reach the split's cache; the text stays
+    # in the corpus cache. Fit, predict and evaluate all read that one
+    # persisted draw.
     train, test = ml.stratified_split(
-        labeled, "label", "doc_id", train_fraction, seed
+        vectorized.select("doc_id", F.col("sex").alias("label"), "features"),
+        "label",
+        train_fraction,
+        seed,
     )
-    # Persist both splits: fit, predict, confusion, and accuracy are
-    # separate actions — without this each one re-runs the tokenize →
-    # vectorize chain (measured ~2x the whole pipeline at 60k docs).
-    train = train.persist()
-    test = test.persist()
     if stage_timings is not None:
         # materialize the featurize chain (tokenize → stem-map → vectorize
         # → split) so the fit stage below times ONLY the tree
@@ -159,9 +104,9 @@ def ep1_classification(
     if stage_timings is not None:
         stage_timings["tree_fit"] = round(_time.perf_counter() - _t0, 1)
         _t0 = _time.perf_counter()
-    pred = ml.predict(model, test).persist()
+    pred = ml.predict(model, test)
+    confusion, acc = ml.evaluate(pred)
     if stage_timings is not None:
-        pred.count()
         stage_timings["predict_eval"] = round(_time.perf_counter() - _t0, 1)
     return EP1Result(
         tokenized=tokenized,
@@ -170,19 +115,25 @@ def ep1_classification(
         test=test,
         model=model,
         predictions=pred,
-        confusion=ml.confusion_matrix(pred),
-        accuracy=ml.accuracy(pred),
+        confusion=confusion,
+        accuracy=acc,
         vocabulary=vocab,
     )
 
 
+def _trimmed_counts(tokenized: DataFrame, min_docfreq: int, min_termfreq: int) -> DataFrame:
+    """The trimmed long-form DFM both EP-1 and EP-2 build: one helper, so
+    their plans stay equal and EP-2 reads EP-1's cache."""
+    return dfm.trim_vocabulary(dfm.doc_term_counts(tokenized), min_docfreq, min_termfreq)
+
+
 def ep2_tfidf(tokenized: DataFrame, *, min_docfreq: int = 2, min_termfreq: int = 3) -> DataFrame:
     """EP-2: trimmed long-form DFM → reference-semantics TF-IDF
-    (tf=count/doc_total, idf=log10(N/df))."""
-    counts = dfm.trim_vocabulary(
-        dfm.doc_term_counts(tokenized), min_docfreq, min_termfreq
-    )
-    return tfidf.tf_idf(counts)
+    (tf=count/doc_total, idf=log10(N/df)). After ``ep1_classification``
+    on the same profiles, pass ``tokenize_corpus(profiles_to_docs(p))``
+    with EP-1's trim floors: the corpus and the DFM then come from EP-1's
+    cache."""
+    return tfidf.tf_idf(_trimmed_counts(tokenized, min_docfreq, min_termfreq))
 
 
 @dataclass
@@ -206,18 +157,19 @@ def ep3_word_analysis(
     """EP-3: per-sex frequency rankings (raw-split semantics, R:258–270),
     distinctive-word setdiffs (R:278–280), optional k-means sweep
     (R:301–313) when a vectorized frame is supplied."""
-    docs = corpus.profiles_to_docs(profiles)
-    male = docs.filter(F.col("sex") == "m")
-    female = docs.filter(F.col("sex") == "f")
+    docs = corpus.profiles_to_docs(profiles).filter(F.col("sex").isin("m", "f"))
     costs: dict[int, float] = {}
     if vectorized is not None and kmeans_ks:
         vectorized = vectorized.cache()
         for k in kmeans_ks:
             _, costs[k] = ml.kmeans_restarts(vectorized, k, seed=seed)
+    # One word count for all four lists: each sex's top words, ranked
+    # once and persisted (≤ 2·max(top_k, distinct_k) rows).
+    ranks = freq.group_top_words(docs, "sex", max(top_k, distinct_k)).persist()
     return EP3Result(
-        male_top=freq.top_k_words(male, top_k),
-        female_top=freq.top_k_words(female, top_k),
-        distinctive_male=freq.distinctive_words(docs, "sex", "m", "f", distinct_k),
-        distinctive_female=freq.distinctive_words(docs, "sex", "f", "m", distinct_k),
+        male_top=freq.group_top_k(ranks, "sex", "m", top_k),
+        female_top=freq.group_top_k(ranks, "sex", "f", top_k),
+        distinctive_male=freq.distinctive_words(ranks, "sex", "m", "f", distinct_k),
+        distinctive_female=freq.distinctive_words(ranks, "sex", "f", "m", distinct_k),
         kmeans_costs=costs,
     )
